@@ -1,8 +1,14 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream}
+import java.nio.ByteBuffer
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+import java.util.zip.GZIPInputStream
+import scala.collection.mutable
 import graft.Config
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,8 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 trait LineTransport extends AutoCloseable {
   /** Absolute count of lines available so far (the stream head). Monotone;
-    * may grow between calls for a live transport. Never throws — terminal
-    * transport failure is surfaced via [[failure]]. */
+    * may grow between calls for a live transport. A live transport never
+    * throws here — its terminal failure is surfaced via [[failure]]; a
+    * capture that cannot be read (a corrupt `.gz`) throws, which fails the
+    * query on the driver. */
   def head(): Long
 
   /** Partitions covering lines [start, end). Must be replayable for any
@@ -46,19 +54,7 @@ trait LineTransport extends AutoCloseable {
   override def close(): Unit = ()
 }
 
-/** Line-stream opener shared by the transport head-count (driver) and the
-  * partition readers (executors): real capture files ship gzipped, so a
-  * `.gz` path decodes through GZIPInputStream transparently. */
 object LineIo {
-  def lineStream(path: String): java.util.stream.Stream[String] =
-    if (path.endsWith(".gz")) {
-      val in = new java.util.zip.GZIPInputStream(
-        java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path)), 1 << 16)
-      val br = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-      br.lines().onClose(() => br.close())
-    } else
-      java.nio.file.Files.lines(java.nio.file.Paths.get(path), StandardCharsets.UTF_8)
-
   /** Raw reader over a (possibly gzipped) capture — the tail-capable opener
     * for the continuous reader: after `readLine()` returns null at EOF, a
     * later call picks up lines appended to a PLAIN file since (gzip streams
@@ -71,37 +67,324 @@ object LineIo {
   }
 }
 
-/** Replay transport: a finite newline-delimited capture file (plain or
-  * gzip). The head is counted once (a capture does not grow) unless
-  * `tail=true`, which re-counts per call so a live-appended capture keeps
-  * feeding micro-batches (the latency-bench twin of the continuous tail).
-  * Partition readers open the file on the executor, so no line data moves
-  * through the driver. */
-final class FileLineTransport(path: String, tail: Boolean = false) extends LineTransport {
-  private def countLines(): Long = {
-    val s = LineIo.lineStream(path)
-    try s.count() finally s.close()
+/** `\n` framing over raw bytes, with no charset decode: a line is the bytes
+  * before its `\n`, less one trailing `\r` (so CRLF captures read like LF
+  * ones; a lone `\r` does not end a line), and a last line without `\n`
+  * still counts. Shared by the partition readers and the gzip batch cursor
+  * of [[FileLineTransport]]. */
+private[sources] final class LineBytes(in: InputStream) extends AutoCloseable {
+  // 16 KiB, not 64: allocating a 64 KiB array took ~50 µs (C1 JIT, 2 GB
+  // heap, 4 vCPUs), longer than reading a 40-line partition
+  private var buf = new Array[Byte](1 << 14)
+  private var pos = 0 // next unread byte
+  private var lim = 0 // end of the buffered bytes
+
+  /** Moves the unread bytes to the front, grows the buffer if one line fills
+    * it, and reads more behind them; false at the end of the input. */
+  private def fill(): Boolean = {
+    if (pos > 0) { System.arraycopy(buf, pos, buf, 0, lim - pos); lim -= pos; pos = 0 }
+    if (lim == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+    val r = in.read(buf, lim, buf.length - lim)
+    if (r > 0) lim += r
+    r > 0
   }
-  private lazy val totalLines: Long = countLines()
 
-  override def head(): Long = if (tail) countLines() else totalLines
-
-  override def planPartitions(start: Long, end: Long): Array[InputPartition] =
-    if (path.endsWith(".gz"))
-      // gzip is unsplittable: a range reader must decode from byte 0, so N
-      // chunked partitions would decode the stream N times. One partition
-      // per admitted range; a deployment needing parallel replay of big
-      // captures recompresses to a splittable codec or splits the files.
-      Array(LineRangePartition(path, start, end))
-    else {
-      // chunk the admitted range so partitions parallelize across threads
-      val chunk = math.max(1L, (end - start) / 4)
-      (start until end by chunk)
-        .map(lo => LineRangePartition(path, lo, math.min(end, lo + chunk)))
-        .toArray[InputPartition]
+  /** The next line, or null at the end of the input. */
+  def next(): UTF8String = {
+    var i = pos
+    var found = false
+    var more = true
+    while (!found && more) {
+      while (i < lim && buf(i) != '\n') i += 1
+      if (i < lim) found = true
+      else { val seen = i - pos; more = fill(); i = pos + seen }
     }
+    if (found || lim > pos) {
+      val end = if (i > pos && buf(i - 1) == '\r') i - 1 else i
+      val line = UTF8String.fromBytes(java.util.Arrays.copyOfRange(buf, pos, end))
+      pos = math.min(lim, i + 1)
+      line
+    } else null
+  }
+
+  /** Passes the next `n` lines, copying their bytes (terminators included)
+    * to `out` unless it is null. Returns the lines passed: fewer than `n` at
+    * the end of the input. */
+  def advance(n: Long, out: OutputStream): Long = {
+    var left = n
+    var open = false // bytes passed since the last '\n'
+    var more = true
+    while (left > 0 && more) {
+      var i = pos
+      while (i < lim && left > 0) { if (buf(i) == '\n') left -= 1; i += 1 }
+      if (i > pos) {
+        open = buf(i - 1) != '\n'
+        if (out != null) out.write(buf, pos, i - pos)
+        pos = i
+      }
+      if (left > 0) more = fill()
+    }
+    if (left > 0 && open) left -= 1 // a last line without '\n'
+    n - left
+  }
+
+  override def close(): Unit = in.close()
+}
+
+private[sources] object LineBytes {
+  /** Lines of a capture from `byteOffset`, which must be a line start; a
+    * `.gz` capture is inflated from its first byte. */
+  def open(path: String, byteOffset: Long = 0L): LineBytes = {
+    val gz = path.endsWith(".gz")
+    require(byteOffset == 0L || !gz, s"cannot seek into gzip capture $path")
+    val ch = FileChannel.open(Paths.get(path)).position(byteOffset)
+    try new LineBytes(if (gz) new GZIPInputStream(Channels.newInputStream(ch), 1 << 16)
+      else Channels.newInputStream(ch))
+    catch { case e: Throwable => ch.close(); throw e }
+  }
+}
+
+/** Sparse line → byte-offset index of a plain capture: ascending
+  * (line, offset of that line's first byte) pairs. [[dropBelow]] forgets
+  * the committed prefix, so a long tail keeps only its backlog's entries. */
+private[sources] final class LineIndex {
+  private var lines = new Array[Long](64)
+  private var offs = new Array[Long](64)
+  private var lo = 0 // first live entry
+  private var n = 0  // entries in use
+  add(0L, 0L)
+
+  /** Records `line` starting at byte `off`; a line at or below the last
+    * entry is ignored. */
+  def add(line: Long, off: Long): Unit = if (n == 0 || line > lines(n - 1)) {
+    if (n == lines.length) {
+      val live = n - lo
+      val cap = if (live * 2 > lines.length) lines.length * 2 else lines.length
+      val l2 = new Array[Long](cap); val o2 = new Array[Long](cap)
+      System.arraycopy(lines, lo, l2, 0, live); System.arraycopy(offs, lo, o2, 0, live)
+      lines = l2; offs = o2; n = live; lo = 0
+    }
+    lines(n) = line; offs(n) = off; n += 1
+  }
+
+  private def floorAt(line: Long): Int = {
+    val i = java.util.Arrays.binarySearch(lines, lo, n, line)
+    val at = if (i >= 0) i else -i - 2
+    require(at >= lo, s"line $line is below the committed index floor ${lines(lo)}")
+    at
+  }
+
+  /** The entry at or nearest below `line`: (its line, its byte offset). */
+  def floor(line: Long): (Long, Long) = { val i = floorAt(line); (lines(i), offs(i)) }
+
+  /** Forgets the entries below the floor of `line`. */
+  def dropBelow(line: Long): Unit = lo = floorAt(line)
+
+  def size: Int = n - lo
+}
+
+/** Replay transport: a newline-delimited capture file, plain or gzip.
+  *
+  * A plain capture is scanned once, incrementally: `head()` keeps (bytes
+  * scanned, lines counted) and a [[LineIndex]] entry every
+  * [[FileLineTransport.IndexEvery]] lines, so each partition carries the
+  * nearest indexed (line, byte) pair and its reader seeks there instead of
+  * reading from line 0. Without `tail` the head is counted once (a capture
+  * does not grow) and a last line without `\n` counts. With `tail=true`
+  * every `head()` reads only the bytes appended since the last call, so a
+  * live-appended capture keeps feeding micro-batches at a cost that does
+  * not grow with its age; a torn last line (no `\n` yet) is not counted
+  * until its `\n` arrives, and each head is indexed exactly, so the next
+  * batch's reader starts on it with no skip.
+  *
+  * A gzip capture cannot be split or seeked, so the driver inflates it once
+  * for the head count and once more through one cursor held across
+  * batches: `planPartitions` copies the batch's inflated bytes, split on
+  * `\n` and never decoded, into at most [[FileLineTransport.Splits]] plain
+  * chunk files in a spill directory, and each chunk is an ordinary
+  * [[LineRangePartition]] read in parallel. `commit` deletes the chunks
+  * below the committed offset and `close` the spill directory. The spill
+  * directory is on the driver's local disk (the first of
+  * `SPARK_LOCAL_DIRS` / `spark.local.dir`, else `java.io.tmpdir`), so
+  * executors must share that disk — the same single-host limit that local
+  * mode, and a capture path, already have. */
+final class FileLineTransport(path: String, tail: Boolean = false) extends LineTransport {
+  import FileLineTransport._
+
+  private val gzip = path.endsWith(".gz")
+
+  // plain captures: the incremental scan
+  private val index = new LineIndex
+  private var scanned = 0L   // bytes scanned
+  private var lines = 0L     // '\n'-terminated lines in them
+  private var lineStart = 0L // byte where the line after the last '\n' starts
+  private var counted = false
+  /** Bytes the scan has read from the capture (observable for the tail
+    * spec: a `head()` reads only what was appended). */
+  @volatile private[sources] var bytesScanned = 0L
+
+  private def scan(): Unit = {
+    val ch = FileChannel.open(Paths.get(path))
+    try {
+      val bb = ByteBuffer.allocate(1 << 14)
+      val a = bb.array()
+      var r = ch.read(bb, scanned)
+      while (r > 0) {
+        var i = 0
+        while (i < r) {
+          if (a(i) == '\n') {
+            lines += 1
+            lineStart = scanned + i + 1
+            if (lines % IndexEvery == 0) index.add(lines, lineStart)
+          }
+          i += 1
+        }
+        scanned += r
+        bytesScanned += r
+        bb.clear()
+        r = ch.read(bb, scanned)
+      }
+    } finally ch.close()
+    index.add(lines, lineStart)
+    counted = true
+  }
+
+  private def refresh(): Unit = if (tail || !counted) scan()
+
+  // gzip captures: the head count, and one cursor over the inflated bytes
+  private lazy val gzipLines: Long = {
+    val in = LineBytes.open(path)
+    try in.advance(Long.MaxValue, null) finally in.close()
+  }
+  private var cursor: LineBytes = _
+  private var cursorLine = 0L
+  /** Times the batch cursor opened an inflater (observable for the gzip
+    * spec: once per transport while batches arrive in order). */
+  @volatile private[sources] var inflaterOpens = 0
+  private var spill: Path = _
+  // planned, uncommitted gzip ranges and their chunk files (a batch planned
+  // twice, e.g. by two actions in one foreachBatch, reuses its chunks)
+  private val spilled = mutable.LinkedHashMap[(Long, Long), (Array[InputPartition], Seq[Path])]()
+  private val cleanup = new Thread(() => deleteSpill(), "oanda-replay-spill-cleanup")
+
+  /** The spill directory, once a gzip batch has been planned. */
+  private[sources] def spillDir: Option[Path] = synchronized(Option(spill))
+
+  override def head(): Long = synchronized {
+    if (gzip) gzipLines
+    else { refresh(); if (tail) lines else lines + (if (scanned > lineStart) 1 else 0) }
+  }
+
+  override def planPartitions(start: Long, end: Long): Array[InputPartition] = synchronized {
+    if (gzip) spilled.get((start, end)).map(_._1).getOrElse(spillBatch(start, end))
+    else {
+      if (lines < end) refresh()
+      splits(start, end).map { case (lo, hi) =>
+        val (at, off) = index.floor(lo)
+        LineRangePartition(path, lo, hi, off, at): InputPartition
+      }
+    }
+  }
+
+  private def spillBatch(start: Long, end: Long): Array[InputPartition] = {
+    if (cursor == null || start < cursorLine) {
+      if (cursor != null) cursor.close()
+      cursor = LineBytes.open(path)
+      cursorLine = 0L
+      inflaterOpens += 1
+    }
+    cursorLine += cursor.advance(start - cursorLine, null)
+    if (spill == null) {
+      val root = Paths.get(sys.env.get("SPARK_LOCAL_DIRS")
+        .orElse(Option(SparkEnv.get).flatMap(_.conf.getOption("spark.local.dir")))
+        .getOrElse(System.getProperty("java.io.tmpdir")).split(",")(0))
+      spill = Files.createTempDirectory(Files.createDirectories(root), "oanda-replay-spill-")
+      Runtime.getRuntime.addShutdownHook(cleanup)
+    }
+    val chunks = splits(start, end).map { case (lo, hi) =>
+      val f = spill.resolve(s"lines-$lo-$hi")
+      val out = Files.newOutputStream(f)
+      val n = try cursor.advance(hi - lo, out) finally out.close()
+      cursorLine += n
+      (LineRangePartition(f.toString, 0L, n): InputPartition, f)
+    }
+    val parts = chunks.map(_._1)
+    spilled((start, end)) = (parts, chunks.map(_._2).toSeq)
+    parts
+  }
 
   override def readerFactory: PartitionReaderFactory = LineReaderFactory
+
+  override def commit(upTo: Long): Unit = synchronized {
+    if (gzip) {
+      val done = spilled.keys.filter(_._2 <= upTo).toList
+      done.foreach(k => spilled.remove(k).foreach(_._2.foreach(Files.deleteIfExists)))
+    } else index.dropBelow(upTo)
+  }
+
+  private def deleteSpill(): Unit = {
+    val d = spill
+    if (d != null && Files.isDirectory(d)) {
+      val s = Files.list(d)
+      try s.forEach(f => Files.deleteIfExists(f)) finally s.close()
+      Files.deleteIfExists(d)
+    }
+  }
+
+  override def close(): Unit = synchronized {
+    if (cursor != null) { cursor.close(); cursor = null }
+    if (spill != null) {
+      deleteSpill()
+      try Runtime.getRuntime.removeShutdownHook(cleanup)
+      catch { case _: IllegalStateException => () } // already shutting down
+      spill = null
+      spilled.clear()
+    }
+  }
+}
+
+object FileLineTransport {
+  /** Most partitions (and gzip chunk files) one batch is split into. */
+  private[sources] val Splits = 4
+  /** Fewest lines worth a partition of their own: a smaller batch (a live
+    * tail's few lines a trigger) is one partition, read from one seek. */
+  private[sources] val MinSplitLines = 1024L
+  /** Lines between [[LineIndex]] entries: a reader skips fewer than this
+    * many lines past its seek point. */
+  private[sources] val IndexEvery = 64L
+
+  /** [start, end) cut into at most [[Splits]] even ranges of at least
+    * [[MinSplitLines]] lines each. */
+  private def splits(start: Long, end: Long): Array[(Long, Long)] = {
+    val n = end - start
+    val k = math.max(1L, math.min(Splits.toLong, n / MinSplitLines))
+    if (n <= 0) Array.empty
+    else Array.tabulate(k.toInt)(i => (start + n * i / k, start + n * (i + 1) / k))
+  }
+}
+
+/** Lines [start, end) of a capture. A plain capture's reader seeks to
+  * `byteOffset`, the start of line `offsetLine` (at or below `start`), and
+  * skips the lines between; a `.gz` capture is read from its first byte. */
+case class LineRangePartition(path: String, start: Long, end: Long,
+    byteOffset: Long = 0L, offsetLine: Long = 0L) extends InputPartition
+
+object LineReaderFactory extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[LineRangePartition]
+    val lines = LineBytes.open(p.path, p.byteOffset)
+    try lines.advance(p.start - p.offsetLine, null)
+    catch { case e: Throwable => lines.close(); throw e }
+    new PartitionReader[InternalRow] {
+      private var left = math.max(0L, p.end - p.start)
+      private var current: UTF8String = _
+      override def next(): Boolean = left > 0 && {
+        current = lines.next(); left -= 1; current != null
+      }
+      override def get(): InternalRow = InternalRow(current)
+      override def close(): Unit = lines.close() // one FD per partition otherwise
+    }
+  }
 }
 
 /** Minimal HTTP seam so the live transport is unit-testable without a

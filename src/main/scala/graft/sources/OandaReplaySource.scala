@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
@@ -32,6 +30,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * channel capacity) is the backpressure knob ≙ P7; the passed ReadLimit is
   * honored (maxOffsetsPerTrigger etc.), and Trigger.AvailableNow drains the
   * whole capture in rate-limited batches.
+  *
+  * A batch's read cost is O(batch), not O(capture): a plain capture is
+  * scanned once, incrementally, and its range readers seek to an indexed
+  * line; a `.gz` capture is inflated by one driver-side cursor held across
+  * batches, which spills each batch into at most four plain chunk files
+  * that executors read in parallel (see [[FileLineTransport]]). Lines are
+  * framed on `\n` as raw UTF-8 bytes, with no charset decode.
   *
   * Usage:
   * {{{
@@ -105,24 +110,6 @@ class OandaReplayTable(path: String, linesPerTrigger: Int, transport: String = "
 /** Offset = number of lines already emitted (monotone). */
 case class LineOffset(line: Long) extends Offset {
   override def json(): String = s"""{"line":$line}"""
-}
-
-case class LineRangePartition(path: String, start: Long, end: Long) extends InputPartition
-
-object LineReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[LineRangePartition]
-    new PartitionReader[InternalRow] {
-      private val stream = LineIo.lineStream(p.path) // plain or .gz capture
-      private val it = stream.skip(p.start)
-        .limit(math.max(0L, p.end - p.start)).iterator()
-      private var current: String = _
-      override def next(): Boolean = { val has = it.hasNext; if (has) current = it.next(); has }
-      override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(current))
-      override def close(): Unit = stream.close() // one FD per partition otherwise
-    }
-  }
 }
 
 class OandaReplayMicroBatchStream(transport: LineTransport, linesPerTrigger: Int)

@@ -2,8 +2,14 @@ package graft.sources
 
 import graft.SparkTestSession
 import graft.streaming.OandaPipeline
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, StandardOpenOption}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.Offset
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The custom MicroBatchStream connector (P1/P2/P7): line framing, schema,
   * rate-limited micro-batches, exactly-once line accounting, and composition
@@ -17,6 +23,42 @@ class OandaReplaySourceSpec extends AnyFunSuite {
     Files.writeString(f, lines.mkString("\n"))
     f.toString
   }
+
+  private def gzCapture(lines: Seq[String]): String = {
+    val gz = Files.createTempFile("oanda-capture", ".jsonl.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write(lines.mkString("\n").getBytes(UTF_8)) finally out.close()
+    gz.toString
+  }
+
+  private def readAll(p: InputPartition): Seq[String] = {
+    val r = LineReaderFactory.createReader(p)
+    try Iterator.continually(r.next()).takeWhile(identity)
+      .map(_ => r.get().getUTF8String(0).toString).toList
+    finally r.close()
+  }
+
+  /** Drives a micro-batch stream by hand the way MicroBatchExecution does
+    * (latestOffset → planInputPartitions → read → commit) until it is
+    * drained; `onBatch` sees each batch's partitions before they are read. */
+  private def drive(s: OandaReplayMicroBatchStream)(
+      onBatch: (Offset, Offset, Array[InputPartition]) => Unit = (_, _, _) => ()): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    var start: Offset = s.initialOffset()
+    var end = s.latestOffset(start, s.getDefaultReadLimit)
+    while (end != start) {
+      val parts = s.planInputPartitions(start, end)
+      onBatch(start, end, parts)
+      parts.foreach(out ++= readAll(_))
+      s.commit(end)
+      start = end
+      end = s.latestOffset(start, s.getDefaultReadLimit)
+    }
+    out.toSeq
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
 
   private val ticks = (1 to 10).map { i =>
     s"""{"asks":[{"price":"1.0$i","liquidity":100}],"bids":[{"price":"1.00","liquidity":100}],""" +
@@ -108,17 +150,13 @@ class OandaReplaySourceSpec extends AnyFunSuite {
       spark.read.format("oanda-replay").option("transport", "http").load().count()
     }
     // Spark may wrap the planner exception; the root message must survive
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("batch read is only supported for transport=file")),
       s"got: ${messages(e)}")
   }
 
   test("gzip capture replays identically to the plain file (streaming + batch)") {
     val plain = captureFile(ticks)
-    val gz = Files.createTempFile("oanda-capture", ".jsonl.gz")
-    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
-    try out.write(ticks.mkString("\n").getBytes("UTF-8")) finally out.close()
+    val gz = gzCapture(ticks)
     def drain(path: String): Seq[String] = {
       val name = s"gzrep_${System.nanoTime()}"
       val q = spark.readStream.format("oanda-replay")
@@ -134,5 +172,135 @@ class OandaReplaySourceSpec extends AnyFunSuite {
     val batchGz = spark.read.format("oanda-replay").option("path", gz.toString)
       .load().collect().map(_.getString(0)).toSeq.sorted
     assert(batchGz == drain(plain), "gzip batch read diverges")
+  }
+
+  test("gzip replay inflates once, spills each batch into chunk files, and cleans up") {
+    val lines = (0 until 7500).map(i => s"""{"n":$i,"pad":"${"x" * (i % 50)}"}""")
+    val gz = gzCapture(lines)
+    val t = new FileLineTransport(gz)
+    val s = new OandaReplayMicroBatchStream(t, 2500)
+    var batches = 0
+    val out = drive(s) { (start, end, parts) =>
+      batches += 1
+      // 2 500 lines: two chunks of at least MinSplitLines each
+      assert(parts.length == 2)
+      // a batch planned twice (two actions in one foreachBatch) reuses its chunks
+      assert(s.planInputPartitions(start, end).toSeq == parts.toSeq)
+    }
+    assert(batches == 3)
+    assert(out == lines, "gzip replay diverges from the capture")
+    assert(drive(new OandaReplayMicroBatchStream(
+      new FileLineTransport(captureFile(lines)), 2500))() == out, "gzip diverges from plain")
+    assert(t.inflaterOpens == 1, "each batch must not re-inflate the capture")
+    val dir = t.spillDir.getOrElse(fail("no spill directory"))
+    val left = Files.list(dir)
+    try assert(left.count() == 0, "chunk files left after the last commit") finally left.close()
+    s.stop()
+    assert(!Files.exists(dir), "spill directory left after stop()")
+  }
+
+  test("a gzip query stopped mid-capture and restarted on its checkpoint delivers every line once") {
+    val gz = gzCapture(ticks)
+    val ckpt = Files.createTempDirectory("gz-restart").toString
+    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
+    def run(failAt: Long): Unit = {
+      val q = spark.readStream.format("oanda-replay")
+        .option("path", gz).option("linesPerTrigger", "4").load()
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          if (id == failAt) throw new IllegalStateException("stopped mid-capture")
+          seen.put(id, df.collect().map(_.getString(0)).toSeq) // idempotent by batch id
+          ()
+        }.start()
+      try q.processAllAvailable()
+      catch { case _: StreamingQueryException if failAt >= 0 => () }
+      finally q.stop()
+    }
+    run(failAt = 1) // batch 1 is planned and logged, never committed
+    assert(seen.keySet.asScala == Set(0L))
+    run(failAt = -1) // replays batch 1 on a fresh transport, then drains
+    val all = seen.asScala.toSeq.sortBy(_._1).flatMap(_._2)
+    assert(all == ticks, "restart lost or repeated lines")
+  }
+
+  test("a truncated or corrupt .gz capture fails the query instead of hanging it") {
+    val whole = Files.readAllBytes(java.nio.file.Paths.get(gzCapture(ticks)))
+    val truncated = Files.createTempFile("oanda-truncated", ".jsonl.gz")
+    Files.write(truncated, whole.take(whole.length / 2))
+    val corrupt = Files.createTempFile("oanda-corrupt", ".jsonl.gz")
+    Files.write(corrupt, "not gzip at all".getBytes(UTF_8))
+    // planned with no head() first (the planner raises it on the driver)
+    intercept[java.io.IOException](new FileLineTransport(truncated.toString).planPartitions(0, 10))
+    intercept[java.io.IOException](new FileLineTransport(corrupt.toString).planPartitions(0, 10))
+    for (bad <- Seq(truncated, corrupt)) {
+      val q = spark.readStream.format("oanda-replay").option("path", bad.toString).load()
+        .writeStream
+        .option("checkpointLocation", Files.createTempDirectory("gz-bad").toString)
+        .format("noop").start()
+      val failure =
+        try { q.awaitTermination(60000); None }
+        catch { case e: StreamingQueryException => Some(e) }
+        finally q.stop()
+      assert(failure.isDefined, s"query over $bad neither failed nor stopped within 60 s")
+      assert(messages(failure.get).exists(m => m.contains("ZLIB") || m.contains("GZIP")),
+        s"got: ${messages(failure.get)}")
+    }
+  }
+
+  test("tail head() reads only appended bytes; a torn last line counts once its newline arrives") {
+    val f = Files.createTempFile("oanda-tail", ".jsonl")
+    def append(s: String): Unit = Files.write(f, s.getBytes(UTF_8), StandardOpenOption.APPEND)
+    append("a\nb\n")
+    val t = new FileLineTransport(f.toString, tail = true)
+    assert(t.head() == 2 && t.bytesScanned == 4)
+    append("c") // torn: no newline yet
+    assert(t.head() == 2 && t.bytesScanned == 5)
+    append("d\r\n")
+    assert(t.head() == 3 && t.bytesScanned == 8)
+    assert(t.head() == 3 && t.bytesScanned == 8, "nothing appended, nothing to read")
+    assert(t.planPartitions(0, 3).toSeq.flatMap(readAll) == Seq("a", "b", "cd"))
+    // each head is indexed exactly: the next batch's reader seeks with no skip
+    val next = t.planPartitions(2, 3).head.asInstanceOf[LineRangePartition]
+    assert(next.offsetLine == 2 && next.byteOffset == 4)
+  }
+
+  test("a finite capture counts its last unterminated line; CRLF reads like LF") {
+    val lf = captureFile(Seq("a", "", "b")) // no trailing newline
+    assert(new FileLineTransport(lf).head() == 3)
+    assert(new FileLineTransport(lf, tail = true).head() == 2, "a tail waits for the newline")
+    val crlf = Files.createTempFile("oanda-crlf", ".jsonl")
+    Files.write(crlf, "a\r\n\r\nb".getBytes(UTF_8))
+    def lines(path: String): Seq[String] = {
+      val t = new FileLineTransport(path)
+      t.planPartitions(0, t.head()).toSeq.flatMap(readAll)
+    }
+    assert(lines(crlf.toString) == lines(lf))
+    assert(lines(lf) == Seq("a", "", "b"))
+  }
+
+  test("range readers seek to an indexed line and skip fewer than IndexEvery lines") {
+    val lines = (0 until 3000).map(i => s"line-$i-${"y" * (i % 37)}")
+    val path = captureFile(lines)
+    for (start <- Seq(0, 1, 63, 64, 65, 1000, 2048, 2999)) {
+      val t = new FileLineTransport(path) // planned with no head() first
+      val parts = t.planPartitions(start, 3000).map(_.asInstanceOf[LineRangePartition])
+      parts.foreach { p =>
+        assert(p.offsetLine <= p.start && p.start - p.offsetLine < FileLineTransport.IndexEvery,
+          s"partition $p skips from too far back")
+      }
+      assert(parts.toSeq.flatMap(readAll) == lines.drop(start), s"range from $start")
+    }
+    assert(new FileLineTransport(path).planPartitions(0, 3000).length == 2,
+      "3 000 lines: two partitions of at least MinSplitLines lines")
+    // a commit forgets the entries below the committed floor, so a long tail
+    // keeps only its backlog's
+    val ix = new LineIndex
+    (1 to 1000).foreach(i => ix.add(i * 64L, i * 1000L))
+    ix.dropBelow(64000L - 1)
+    assert(ix.size == 2 && ix.floor(63999L) == ((63936L, 999000L)))
+    (1001 to 5000).foreach(i => ix.add(i * 64L, i * 1000L))
+    assert(ix.floor(64000L * 5 + 10) == ((320000L, 5000000L)))
+    intercept[IllegalArgumentException](ix.floor(100L))
   }
 }
