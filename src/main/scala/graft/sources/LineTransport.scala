@@ -54,24 +54,12 @@ trait LineTransport extends AutoCloseable {
   override def close(): Unit = ()
 }
 
-object LineIo {
-  /** Raw reader over a (possibly gzipped) capture — the tail-capable opener
-    * for the continuous reader: after `readLine()` returns null at EOF, a
-    * later call picks up lines appended to a PLAIN file since (gzip streams
-    * cannot grow; a continuous query over a .gz capture drains it and then
-    * idles). */
-  def lineReader(path: String): BufferedReader = {
-    val raw = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))
-    val in = if (path.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw, 1 << 16) else raw
-    new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-  }
-}
-
 /** `\n` framing over raw bytes, with no charset decode: a line is the bytes
   * before its `\n`, less one trailing `\r` (so CRLF captures read like LF
   * ones; a lone `\r` does not end a line), and a last line without `\n`
-  * still counts. Shared by the partition readers and the gzip batch cursor
-  * of [[FileLineTransport]]. */
+  * still counts. Shared by the partition readers, the gzip batch cursor of
+  * [[FileLineTransport]] and the continuous file reader, which calls
+  * `next()` again after it returned null to pick up appended lines. */
 private[sources] final class LineBytes(in: InputStream) extends AutoCloseable {
   // 16 KiB, not 64: allocating a 64 KiB array took ~50 µs (C1 JIT, 2 GB
   // heap, 4 vCPUs), longer than reading a 40-line partition
@@ -262,9 +250,8 @@ final class FileLineTransport(path: String, tail: Boolean = false) extends LineT
     * spec: once per transport while batches arrive in order). */
   @volatile private[sources] var inflaterOpens = 0
   private var spill: Path = _
-  // planned, uncommitted gzip ranges and their chunk files (a batch planned
-  // twice, e.g. by two actions in one foreachBatch, reuses its chunks)
-  private val spilled = mutable.LinkedHashMap[(Long, Long), (Array[InputPartition], Seq[Path])]()
+  // uncommitted chunk files: (end line of the chunk, its file)
+  private val spilled = mutable.ArrayBuffer[(Long, Path)]()
   private val cleanup = new Thread(() => deleteSpill(), "oanda-replay-spill-cleanup")
 
   /** The spill directory, once a gzip batch has been planned. */
@@ -276,7 +263,7 @@ final class FileLineTransport(path: String, tail: Boolean = false) extends LineT
   }
 
   override def planPartitions(start: Long, end: Long): Array[InputPartition] = synchronized {
-    if (gzip) spilled.get((start, end)).map(_._1).getOrElse(spillBatch(start, end))
+    if (gzip) spillBatch(start, end)
     else {
       if (lines < end) refresh()
       splits(start, end).map { case (lo, hi) =>
@@ -301,24 +288,23 @@ final class FileLineTransport(path: String, tail: Boolean = false) extends LineT
       spill = Files.createTempDirectory(Files.createDirectories(root), "oanda-replay-spill-")
       Runtime.getRuntime.addShutdownHook(cleanup)
     }
-    val chunks = splits(start, end).map { case (lo, hi) =>
+    splits(start, end).map { case (lo, hi) =>
       val f = spill.resolve(s"lines-$lo-$hi")
       val out = Files.newOutputStream(f)
       val n = try cursor.advance(hi - lo, out) finally out.close()
       cursorLine += n
-      (LineRangePartition(f.toString, 0L, n): InputPartition, f)
+      spilled += ((hi, f))
+      LineRangePartition(f.toString, 0L, n): InputPartition
     }
-    val parts = chunks.map(_._1)
-    spilled((start, end)) = (parts, chunks.map(_._2).toSeq)
-    parts
   }
 
   override def readerFactory: PartitionReaderFactory = LineReaderFactory
 
   override def commit(upTo: Long): Unit = synchronized {
     if (gzip) {
-      val done = spilled.keys.filter(_._2 <= upTo).toList
-      done.foreach(k => spilled.remove(k).foreach(_._2.foreach(Files.deleteIfExists)))
+      val (done, live) = spilled.partition(_._1 <= upTo)
+      done.foreach(c => Files.deleteIfExists(c._2))
+      spilled.clear(); spilled ++= live
     } else index.dropBelow(upTo)
   }
 
@@ -346,18 +332,14 @@ final class FileLineTransport(path: String, tail: Boolean = false) extends LineT
 object FileLineTransport {
   /** Most partitions (and gzip chunk files) one batch is split into. */
   private[sources] val Splits = 4
-  /** Fewest lines worth a partition of their own: a smaller batch (a live
-    * tail's few lines a trigger) is one partition, read from one seek. */
-  private[sources] val MinSplitLines = 1024L
   /** Lines between [[LineIndex]] entries: a reader skips fewer than this
     * many lines past its seek point. */
   private[sources] val IndexEvery = 64L
 
-  /** [start, end) cut into at most [[Splits]] even ranges of at least
-    * [[MinSplitLines]] lines each. */
+  /** [start, end) cut into at most [[Splits]] even ranges. */
   private def splits(start: Long, end: Long): Array[(Long, Long)] = {
     val n = end - start
-    val k = math.max(1L, math.min(Splits.toLong, n / MinSplitLines))
+    val k = math.min(Splits.toLong, n)
     if (n <= 0) Array.empty
     else Array.tabulate(k.toInt)(i => (start + n * i / k, start + n * (i + 1) / k))
   }

@@ -262,31 +262,30 @@ object ContinuousLineReaderFactory extends ContinuousPartitionReaderFactory {
   * EOF sleeps `pollMs` and retries — appended lines flow through with
   * ~pollMs latency, forever (a continuous stream is unbounded; the query
   * stops when the user stops it, and Spark interrupts the blocked task).
-  * Tail caveat: a producer must append whole lines (write line+\n in one
-  * call) — readLine on a torn write would frame a partial line, the
-  * standard tail contract. */
+  * Lines are framed by [[LineBytes]], like the micro-batch readers'. Tail
+  * caveat: a producer must append whole lines (write line+\n in one call)
+  * — a torn write would frame a partial line, the standard tail contract. */
 private final class ContinuousFileLineReader(path: String, startLine: Long, pollMs: Long)
     extends ContinuousPartitionReader[InternalRow] {
-  private val br = LineIo.lineReader(path)
-  private var lineNo = 0L
-  // skip to the restored offset (cheap line-skip; a capture replay restart)
-  while (lineNo < startLine && br.readLine() != null) lineNo += 1
-  private var current: String = _
+  private val lines = LineBytes.open(path)
+  // skip to the restored offset (a capture replay restart)
+  private var lineNo = lines.advance(startLine, null)
+  private var current: UTF8String = _
 
   override def next(): Boolean = {
-    var line = br.readLine()
+    var line = lines.next()
     while (line == null) { // EOF: tail for appends (plain files grow; gz idles)
       Thread.sleep(pollMs) // InterruptedException propagates on query stop
-      line = br.readLine()
+      line = lines.next()
     }
     current = line
     lineNo += 1
     true
   }
 
-  override def get(): InternalRow = InternalRow(UTF8String.fromString(current))
+  override def get(): InternalRow = InternalRow(current)
   override def getOffset: PartitionOffset = LinePartitionOffset(lineNo)
-  override def close(): Unit = br.close()
+  override def close(): Unit = lines.close()
 }
 
 /** Live-wire continuous reader: the HTTP transport runs INSIDE the

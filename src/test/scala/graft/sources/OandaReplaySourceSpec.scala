@@ -180,12 +180,9 @@ class OandaReplaySourceSpec extends AnyFunSuite {
     val t = new FileLineTransport(gz)
     val s = new OandaReplayMicroBatchStream(t, 2500)
     var batches = 0
-    val out = drive(s) { (start, end, parts) =>
+    val out = drive(s) { (_, _, parts) =>
       batches += 1
-      // 2 500 lines: two chunks of at least MinSplitLines each
-      assert(parts.length == 2)
-      // a batch planned twice (two actions in one foreachBatch) reuses its chunks
-      assert(s.planInputPartitions(start, end).toSeq == parts.toSeq)
+      assert(parts.length == FileLineTransport.Splits)
     }
     assert(batches == 3)
     assert(out == lines, "gzip replay diverges from the capture")
@@ -291,8 +288,8 @@ class OandaReplaySourceSpec extends AnyFunSuite {
       }
       assert(parts.toSeq.flatMap(readAll) == lines.drop(start), s"range from $start")
     }
-    assert(new FileLineTransport(path).planPartitions(0, 3000).length == 2,
-      "3 000 lines: two partitions of at least MinSplitLines lines")
+    assert(new FileLineTransport(path).planPartitions(0, 3000).length == FileLineTransport.Splits)
+    assert(new FileLineTransport(path).planPartitions(0, 3).length == 3)
     // a commit forgets the entries below the committed floor, so a long tail
     // keeps only its backlog's
     val ix = new LineIndex
@@ -302,5 +299,19 @@ class OandaReplaySourceSpec extends AnyFunSuite {
     (1001 to 5000).foreach(i => ix.add(i * 64L, i * 1000L))
     assert(ix.floor(64000L * 5 + 10) == ((320000L, 5000000L)))
     intercept[IllegalArgumentException](ix.floor(100L))
+  }
+
+  test("the continuous file reader frames lines like the micro-batch readers") {
+    val f = Files.createTempFile("oanda-cont", ".jsonl")
+    Files.write(f, "a\r\nb\rc\n\nd\u00ff\n".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    val t = new FileLineTransport(f.toString)
+    val batch = t.planPartitions(0, t.head()).toSeq.flatMap(readAll)
+    assert(batch.length == 4, s"got $batch")
+    val r = new ContinuousFileLineReader(f.toString, startLine = 1, pollMs = 10)
+    try {
+      val cont = batch.indices.drop(1).map { _ => assert(r.next()); r.get().getUTF8String(0).toString }
+      assert(cont == batch.drop(1))
+      assert(r.getOffset == LinePartitionOffset(4L))
+    } finally r.close()
   }
 }
