@@ -1,12 +1,11 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream}
+import java.io.InputStream
 import java.nio.ByteBuffer
 import java.nio.channels.{Channels, FileChannel}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.zip.GZIPInputStream
-import scala.collection.mutable
+import scala.util.Using
 import graft.Config
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.InternalRow
@@ -57,8 +56,9 @@ trait LineTransport extends AutoCloseable {
 /** `\n` framing over raw bytes, with no charset decode: a line is the bytes
   * before its `\n`, less one trailing `\r` (so CRLF captures read like LF
   * ones; a lone `\r` does not end a line), and a last line without `\n`
-  * still counts. Shared by the partition readers, the gzip batch cursor of
-  * [[FileLineTransport]] and the continuous file reader, which calls
+  * still counts — the reference's `read_line` framing (`oanda_client.rs:
+  * 34-48`). The one framing of every transport: the partition readers, the
+  * HTTP transport's body reader and the continuous file reader, which calls
   * `next()` again after it returned null to pick up appended lines. */
 private[sources] final class LineBytes(in: InputStream) extends AutoCloseable {
   // 16 KiB, not 64: allocating a 64 KiB array took ~50 µs (C1 JIT, 2 GB
@@ -95,21 +95,16 @@ private[sources] final class LineBytes(in: InputStream) extends AutoCloseable {
     } else null
   }
 
-  /** Passes the next `n` lines, copying their bytes (terminators included)
-    * to `out` unless it is null. Returns the lines passed: fewer than `n` at
+  /** Passes the next `n` lines. Returns the lines passed: fewer than `n` at
     * the end of the input. */
-  def advance(n: Long, out: OutputStream): Long = {
+  def advance(n: Long): Long = {
     var left = n
     var open = false // bytes passed since the last '\n'
     var more = true
     while (left > 0 && more) {
       var i = pos
       while (i < lim && left > 0) { if (buf(i) == '\n') left -= 1; i += 1 }
-      if (i > pos) {
-        open = buf(i - 1) != '\n'
-        if (out != null) out.write(buf, pos, i - pos)
-        pos = i
-      }
+      if (i > pos) { open = buf(i - 1) != '\n'; pos = i }
       if (left > 0) more = fill()
     }
     if (left > 0 && open) left -= 1 // a last line without '\n'
@@ -173,7 +168,7 @@ private[sources] final class LineIndex {
 
 /** Replay transport: a newline-delimited capture file, plain or gzip.
   *
-  * A plain capture is scanned once, incrementally: `head()` keeps (bytes
+  * A capture is scanned once, incrementally: `head()` keeps (bytes
   * scanned, lines counted) and a [[LineIndex]] entry every
   * [[FileLineTransport.IndexEvery]] lines, so each partition carries the
   * nearest indexed (line, byte) pair and its reader seeks there instead of
@@ -185,23 +180,23 @@ private[sources] final class LineIndex {
   * until its `\n` arrives, and each head is indexed exactly, so the next
   * batch's reader starts on it with no skip.
   *
-  * A gzip capture cannot be split or seeked, so the driver inflates it once
-  * for the head count and once more through one cursor held across
-  * batches: `planPartitions` copies the batch's inflated bytes, split on
-  * `\n` and never decoded, into at most [[FileLineTransport.Splits]] plain
-  * chunk files in a spill directory, and each chunk is an ordinary
-  * [[LineRangePartition]] read in parallel. `commit` deletes the chunks
-  * below the committed offset and `close` the spill directory. The spill
-  * directory is on the driver's local disk (the first of
-  * `SPARK_LOCAL_DIRS` / `spark.local.dir`, else `java.io.tmpdir`), so
-  * executors must share that disk — the same single-host limit that local
-  * mode, and a capture path, already have. */
+  * A gzip capture cannot be seeked, so its first scan inflates it once into
+  * a plain spill file, and from then on the transport is a plain one over
+  * that file. `tail` is ignored for it: a gzip stream cannot be appended
+  * to, so its last unterminated line counts. The spill file sits on the
+  * driver's local disk (the first of `SPARK_LOCAL_DIRS` /
+  * `spark.local.dir`, else `java.io.tmpdir`), so executors must share that
+  * disk — the same single-host limit that local mode, and a capture path,
+  * already have. The whole inflated capture stays there until `close()`
+  * (or JVM shutdown, for a transport never closed) deletes it: bounded,
+  * since a `.gz` capture is finite, and no line passes through the driver
+  * heap. A truncated or corrupt `.gz` throws from that first scan on the
+  * driver, and leaves no spill file behind. */
 final class FileLineTransport(path: String, tail: Boolean = false) extends LineTransport {
   import FileLineTransport._
 
   private val gzip = path.endsWith(".gz")
-
-  // plain captures: the incremental scan
+  private val follow = tail && !gzip
   private val index = new LineIndex
   private var scanned = 0L   // bytes scanned
   private var lines = 0L     // '\n'-terminated lines in them
@@ -210,9 +205,30 @@ final class FileLineTransport(path: String, tail: Boolean = false) extends LineT
   /** Bytes the scan has read from the capture (observable for the tail
     * spec: a `head()` reads only what was appended). */
   @volatile private[sources] var bytesScanned = 0L
+  /** Times a `.gz` capture was inflated (observable for the gzip spec: once
+    * per transport, the head count included). */
+  @volatile private[sources] var inflates = 0
+  private var spill: Path = _
+  private val cleanup = new Thread(() => deleteSpill(), "oanda-replay-spill-cleanup")
+
+  /** The plain file the scan and the readers use: the capture itself, or
+    * its spill file. A failed inflate leaves this unset. */
+  private lazy val plain: String = if (gzip) inflate() else path
+
+  private def inflate(): String = {
+    spill = Files.createTempFile(Files.createDirectories(spillRoot), "oanda-replay-", ".jsonl")
+    Runtime.getRuntime.addShutdownHook(cleanup)
+    inflates += 1
+    try Using.Manager { use =>
+      val in = use(new GZIPInputStream(use(Files.newInputStream(Paths.get(path))), 1 << 16))
+      Files.copy(in, spill, StandardCopyOption.REPLACE_EXISTING)
+    }.get
+    catch { case e: Throwable => close(); throw e }
+    spill.toString
+  }
 
   private def scan(): Unit = {
-    val ch = FileChannel.open(Paths.get(path))
+    val ch = FileChannel.open(Paths.get(plain))
     try {
       val bb = ByteBuffer.allocate(1 << 14)
       val a = bb.array()
@@ -237,104 +253,48 @@ final class FileLineTransport(path: String, tail: Boolean = false) extends LineT
     counted = true
   }
 
-  private def refresh(): Unit = if (tail || !counted) scan()
-
-  // gzip captures: the head count, and one cursor over the inflated bytes
-  private lazy val gzipLines: Long = {
-    val in = LineBytes.open(path)
-    try in.advance(Long.MaxValue, null) finally in.close()
-  }
-  private var cursor: LineBytes = _
-  private var cursorLine = 0L
-  /** Times the batch cursor opened an inflater (observable for the gzip
-    * spec: once per transport while batches arrive in order). */
-  @volatile private[sources] var inflaterOpens = 0
-  private var spill: Path = _
-  // uncommitted chunk files: (end line of the chunk, its file)
-  private val spilled = mutable.ArrayBuffer[(Long, Path)]()
-  private val cleanup = new Thread(() => deleteSpill(), "oanda-replay-spill-cleanup")
-
-  /** The spill directory, once a gzip batch has been planned. */
-  private[sources] def spillDir: Option[Path] = synchronized(Option(spill))
+  private def refresh(): Unit = if (follow || !counted) scan()
 
   override def head(): Long = synchronized {
-    if (gzip) gzipLines
-    else { refresh(); if (tail) lines else lines + (if (scanned > lineStart) 1 else 0) }
+    refresh()
+    if (follow) lines else lines + (if (scanned > lineStart) 1 else 0)
   }
 
   override def planPartitions(start: Long, end: Long): Array[InputPartition] = synchronized {
-    if (gzip) spillBatch(start, end)
-    else {
-      if (lines < end) refresh()
-      splits(start, end).map { case (lo, hi) =>
-        val (at, off) = index.floor(lo)
-        LineRangePartition(path, lo, hi, off, at): InputPartition
-      }
-    }
-  }
-
-  private def spillBatch(start: Long, end: Long): Array[InputPartition] = {
-    if (cursor == null || start < cursorLine) {
-      if (cursor != null) cursor.close()
-      cursor = LineBytes.open(path)
-      cursorLine = 0L
-      inflaterOpens += 1
-    }
-    cursorLine += cursor.advance(start - cursorLine, null)
-    if (spill == null) {
-      val root = Paths.get(sys.env.get("SPARK_LOCAL_DIRS")
-        .orElse(Option(SparkEnv.get).flatMap(_.conf.getOption("spark.local.dir")))
-        .getOrElse(System.getProperty("java.io.tmpdir")).split(",")(0))
-      spill = Files.createTempDirectory(Files.createDirectories(root), "oanda-replay-spill-")
-      Runtime.getRuntime.addShutdownHook(cleanup)
-    }
+    if (lines < end) refresh()
     splits(start, end).map { case (lo, hi) =>
-      val f = spill.resolve(s"lines-$lo-$hi")
-      val out = Files.newOutputStream(f)
-      val n = try cursor.advance(hi - lo, out) finally out.close()
-      cursorLine += n
-      spilled += ((hi, f))
-      LineRangePartition(f.toString, 0L, n): InputPartition
+      val (at, off) = index.floor(lo)
+      LineRangePartition(plain, lo, hi, off, at): InputPartition
     }
   }
 
   override def readerFactory: PartitionReaderFactory = LineReaderFactory
 
-  override def commit(upTo: Long): Unit = synchronized {
-    if (gzip) {
-      val (done, live) = spilled.partition(_._1 <= upTo)
-      done.foreach(c => Files.deleteIfExists(c._2))
-      spilled.clear(); spilled ++= live
-    } else index.dropBelow(upTo)
-  }
+  override def commit(upTo: Long): Unit = synchronized(index.dropBelow(upTo))
 
-  private def deleteSpill(): Unit = {
-    val d = spill
-    if (d != null && Files.isDirectory(d)) {
-      val s = Files.list(d)
-      try s.forEach(f => Files.deleteIfExists(f)) finally s.close()
-      Files.deleteIfExists(d)
-    }
-  }
+  private def deleteSpill(): Unit = if (spill != null) Files.deleteIfExists(spill)
 
   override def close(): Unit = synchronized {
-    if (cursor != null) { cursor.close(); cursor = null }
     if (spill != null) {
       deleteSpill()
       try Runtime.getRuntime.removeShutdownHook(cleanup)
       catch { case _: IllegalStateException => () } // already shutting down
       spill = null
-      spilled.clear()
     }
   }
 }
 
 object FileLineTransport {
-  /** Most partitions (and gzip chunk files) one batch is split into. */
+  /** Most partitions one batch is split into. */
   private[sources] val Splits = 4
   /** Lines between [[LineIndex]] entries: a reader skips fewer than this
     * many lines past its seek point. */
   private[sources] val IndexEvery = 64L
+
+  /** Where a `.gz` capture is inflated: the first local dir of the driver. */
+  private[sources] def spillRoot: Path = Paths.get(sys.env.get("SPARK_LOCAL_DIRS")
+    .orElse(Option(SparkEnv.get).flatMap(_.conf.getOption("spark.local.dir")))
+    .getOrElse(System.getProperty("java.io.tmpdir")).split(",")(0))
 
   /** [start, end) cut into at most [[Splits]] even ranges. */
   private def splits(start: Long, end: Long): Array[(Long, Long)] = {
@@ -355,7 +315,7 @@ object LineReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LineRangePartition]
     val lines = LineBytes.open(p.path, p.byteOffset)
-    try lines.advance(p.start - p.offsetLine, null)
+    try lines.advance(p.start - p.offsetLine)
     catch { case e: Throwable => lines.close(); throw e }
     new PartitionReader[InternalRow] {
       private var left = math.max(0L, p.end - p.start)
@@ -401,7 +361,7 @@ object HttpConnector {
 /** A micro-batch of buffered lines shipped with the partition (driver-side
   * buffering, like Spark's own socket source): batches are bounded by
   * `linesPerTrigger`, so a partition carries at most that many lines. */
-final case class BufferedLinesPartition(lines: Array[String]) extends InputPartition
+final case class BufferedLinesPartition(lines: Array[UTF8String]) extends InputPartition
 
 object BufferedLinesReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -409,7 +369,7 @@ object BufferedLinesReaderFactory extends PartitionReaderFactory {
     new PartitionReader[InternalRow] {
       private var i = -1
       override def next(): Boolean = { i += 1; i < lines.length }
-      override def get(): InternalRow = InternalRow(UTF8String.fromString(lines(i)))
+      override def get(): InternalRow = InternalRow(lines(i))
       override def close(): Unit = ()
     }
   }
@@ -421,8 +381,9 @@ object BufferedLinesReaderFactory extends PartitionReaderFactory {
   *     (`oanda_client.rs:23-26`).
   *   - Non-2xx fails fast with no retry, like `error_for_status`
   *     (`oanda_client.rs:28-30`) — an auth/config error does not heal.
-  *   - The body is framed into `\n`-delimited lines (`:34-48`); framing is
-  *     chunk-boundary-safe (a line split across two chunks reassembles).
+  *   - The body is framed into `\n`-delimited lines (`:34-48`) by
+  *     [[LineBytes]], as a capture is; framing is chunk-boundary-safe (a
+  *     line split across two chunks reassembles).
   *   - At most `maxBuffered` uncommitted lines are held; the reader blocks
   *     beyond that (backpressure ≙ `mpsc::channel(100)`, `main.rs:52`).
   *   - Mid-stream disconnect or EOF (a live pricing stream never ends
@@ -441,11 +402,11 @@ final class HttpLineTransport(
 
   private val lock = new Object
   private var base = 0L // absolute index of buf(0) = last committed offset
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val buf = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
   private var terminal: Option[Throwable] = None
   @volatile private var closed = false
   // the in-flight response body: close() must close it, because a reader
-  // blocked in readLine() on a no-timeout socket ignores Thread.interrupt —
+  // blocked in a read on a no-timeout socket ignores Thread.interrupt —
   // without this every stopped query leaks the thread AND holds the HTTP
   // stream open (duplicate consumption if a new query starts)
   @volatile private var inFlight: InputStream = _
@@ -472,16 +433,16 @@ final class HttpLineTransport(
             s"OANDA stream returned HTTP ${resp.status}"))
         inFlight = resp.body
         if (closed) { try resp.body.close() catch { case _: Exception => () }; return }
-        val br = new BufferedReader(new InputStreamReader(resp.body, StandardCharsets.UTF_8))
+        val body = new LineBytes(resp.body)
         try {
-          var line = br.readLine()
+          var line = body.next()
           while (line != null && !closed) {
             offer(line)
             consecutiveFailures = 0 // progress heals the reconnect budget
-            line = br.readLine()
+            line = body.next()
           }
           if (!closed) throw new java.io.IOException("stream ended (EOF)")
-        } finally { br.close(); inFlight = null }
+        } finally { body.close(); inFlight = null }
       } catch {
         case f: FailFast => done = true; fail(f.e)
         case _: InterruptedException => done = true
@@ -492,7 +453,7 @@ final class HttpLineTransport(
     }
   }
 
-  private def offer(line: String): Unit = lock.synchronized {
+  private def offer(line: UTF8String): Unit = lock.synchronized {
     while (!closed && buf.size >= maxBuffered) lock.wait()
     if (!closed) { buf += line; lock.notifyAll() }
   }
@@ -532,7 +493,7 @@ final class HttpLineTransport(
   override def close(): Unit = {
     closed = true
     lock.synchronized(lock.notifyAll())
-    // closing the body makes the blocked readLine() throw, so the reader
+    // closing the body makes the blocked read throw, so the reader
     // thread actually exits and the server-side stream is released
     val s = inFlight
     if (s != null) { try s.close() catch { case _: Exception => () } }

@@ -31,12 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * honored (maxOffsetsPerTrigger etc.), and Trigger.AvailableNow drains the
   * whole capture in rate-limited batches.
   *
-  * A batch's read cost is O(batch), not O(capture): a plain capture is
-  * scanned once, incrementally, and its range readers seek to an indexed
-  * line; a `.gz` capture is inflated by one driver-side cursor held across
-  * batches, which spills each batch into at most four plain chunk files
-  * that executors read in parallel (see [[FileLineTransport]]). Lines are
-  * framed on `\n` as raw UTF-8 bytes, with no charset decode.
+  * A batch's read cost is O(batch), not O(capture): a capture is scanned
+  * once, incrementally, and its range readers seek to an indexed line. A
+  * `.gz` capture takes the same path over a plain spill file that its first
+  * scan inflates once (see [[FileLineTransport]]). Every transport frames
+  * lines on `\n` as raw UTF-8 bytes, with no charset decode.
   *
   * Usage:
   * {{{
@@ -115,10 +114,6 @@ case class LineOffset(line: Long) extends Offset {
 class OandaReplayMicroBatchStream(transport: LineTransport, linesPerTrigger: Int)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
-
-  /** Replay-path convenience constructor (the round-1 signature). */
-  def this(path: String, linesPerTrigger: Int) =
-    this(new FileLineTransport(path), linesPerTrigger)
 
   /** Head frozen at prepare time so Trigger.AvailableNow drains exactly the
     * lines that existed when the run started, in rate-limited batches, then
@@ -269,7 +264,7 @@ private final class ContinuousFileLineReader(path: String, startLine: Long, poll
     extends ContinuousPartitionReader[InternalRow] {
   private val lines = LineBytes.open(path)
   // skip to the restored offset (a capture replay restart)
-  private var lineNo = lines.advance(startLine, null)
+  private var lineNo = lines.advance(startLine)
   private var current: UTF8String = _
 
   override def next(): Boolean = {
@@ -301,7 +296,7 @@ private[sources] final class ContinuousHttpLineReader(pollMs: Long, maxBuffered:
   private[sources] val transport = mkTransport(maxBuffered)
   private var cursor = 0L
   private var emitted = 0L
-  private var current: String = _
+  private var current: UTF8String = _
 
   override def next(): Boolean = {
     while (transport.head() <= cursor) {
@@ -317,7 +312,7 @@ private[sources] final class ContinuousHttpLineReader(pollMs: Long, maxBuffered:
     true
   }
 
-  override def get(): InternalRow = InternalRow(UTF8String.fromString(current))
+  override def get(): InternalRow = InternalRow(current)
   override def getOffset: PartitionOffset = LinePartitionOffset(emitted)
   override def close(): Unit = transport.close()
 }

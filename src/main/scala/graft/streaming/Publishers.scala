@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.net.Socket
-import java.nio.ByteBuffer
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -11,25 +9,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * The reference publishes each encoded message on a ZeroMQ PUB socket with
   * fire-and-forget semantics — a send error is logged and the stream
   * continues (`/root/reference/src/main.rs:89-93`, `publisher.rs:19-24`).
-  * No ZeroMQ library exists in this environment, so the engine defines the
-  * publisher as an interface with (a) an in-memory implementation for tests
-  * and (b) a plain-TCP length-prefixed implementation documenting the wire
-  * difference; a jeromq-backed PUB implementation is a drop-in third
-  * implementation of the same trait when the jar is available.
+  * The engine defines the publisher as an interface with an in-memory
+  * implementation for tests and the ZMTP 3.0 PUB endpoint of `Zmtp.scala`,
+  * which a stock ZMQ SUB socket attaches to unchanged.
   *
   * Delivery semantics note (SURVEY.md §7.3#4): ZMQ PUB is at-most-once;
-  * Spark foreachBatch replays batches on recovery (at-least-once), so
-  * subscribers that need exactly-once dedup on (batch_id, payload) — the
-  * batch id is carried in the TCP frame header; a replayed batch re-sends
-  * the same (batch_id, payload) pairs.
+  * Spark foreachBatch replays batches on recovery (at-least-once), so a
+  * replayed batch re-sends its messages and a subscriber may see a message
+  * twice.
   */
 trait MessagePublisher extends Serializable with AutoCloseable {
   /** Fire-and-forget publish of one encoded message; must not throw. */
   def publish(message: Array[Byte]): Unit
-  /** Publish with the originating micro-batch id — the dedup key subscribers
-    * use to get exactly-once on top of Spark's at-least-once batch replay
-    * (SURVEY.md §7.3#4). Default ignores the id. */
-  def publishBatch(batchId: Long, message: Array[Byte]): Unit = publish(message)
   override def close(): Unit = ()
 }
 
@@ -49,79 +40,6 @@ object InMemoryPublisher {
   }
 }
 
-/** Plain-TCP stand-in for the ZMQ PUB socket. Frame layout: 4-byte
-  * big-endian payload length, 8-byte big-endian micro-batch id, then the
-  * protobuf payload — the batch id is the subscriber-side dedup key for
-  * exactly-once over batch replay. NOT the ZMQ wire framing — a reference
-  * subscriber cannot attach unchanged (see README "wire deviations").
-  *
-  * Delivery mirrors ZMQ PUB's slow-subscriber behavior (drop at the
-  * high-water mark, `publisher.rs:19-24` fire-and-forget): `publishBatch`
-  * never blocks — frames go through a bounded queue drained by a writer
-  * thread, and when a stalled subscriber fills the queue, new frames are
-  * dropped with a log instead of wedging the whole micro-batch on a socket
-  * write (at-most-once, like PUB). Errors are logged and swallowed. */
-final class TcpPublisher(host: String, port: Int, highWaterMark: Int = 1000)
-    extends MessagePublisher {
-  @transient private var opened = false
-  @transient private lazy val writer = { opened = true; new TcpFrameWriter(host, port, highWaterMark) }
-  override def publish(message: Array[Byte]): Unit = publishBatch(-1L, message)
-  override def publishBatch(batchId: Long, message: Array[Byte]): Unit = {
-    val frame = ByteBuffer.allocate(12 + message.length)
-      .putInt(message.length).putLong(batchId).put(message).array()
-    writer.offer(frame)
-  }
-  override def close(): Unit = if (opened) writer.close()
-}
-
-/** Bounded-queue socket writer backing [[TcpPublisher]] (≙ ZMQ's HWM). */
-private[streaming] final class TcpFrameWriter(host: String, port: Int, hwm: Int) {
-  private val queue = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]](hwm)
-  @volatile private var closed = false
-  private val dropped = new java.util.concurrent.atomic.AtomicLong
-
-  private val thread = new Thread(() => {
-    val socket =
-      try new Socket(host, port)
-      catch {
-        case e: Exception =>
-          System.err.println(s"[publisher] connect to $host:$port failed — " +
-            s"ALL messages from this partition will be dropped: ${e.getMessage}")
-          null
-      }
-    try {
-      while (!closed || !queue.isEmpty) {
-        val frame = queue.poll(50, java.util.concurrent.TimeUnit.MILLISECONDS)
-        if (frame != null && socket != null) {
-          try { socket.getOutputStream.write(frame); socket.getOutputStream.flush() }
-          catch { case e: Exception =>
-            System.err.println(s"[publisher] send failed (message skipped): ${e.getMessage}")
-          }
-        }
-      }
-    } catch { case _: InterruptedException => () }
-    finally if (socket != null) try socket.close() catch { case _: Exception => () }
-  }, s"tcp-publisher-$host:$port")
-  thread.setDaemon(true)
-  thread.start()
-
-  /** Non-blocking enqueue: a full queue (stalled subscriber) drops the frame
-    * with a log — degrade to at-most-once instead of stalling the batch. */
-  def offer(frame: Array[Byte]): Unit =
-    if (!queue.offer(frame)) {
-      val n = dropped.incrementAndGet()
-      if (n == 1 || n % 1000 == 0)
-        System.err.println(s"[publisher] slow subscriber: $n frames dropped at high-water mark $hwm")
-    }
-
-  /** Flush what is queued (bounded wait), then stop the writer. */
-  def close(): Unit = {
-    closed = true
-    thread.join(2000)
-    if (thread.isAlive) thread.interrupt()
-  }
-}
-
 object Sinks {
 
   /** P14: publish the non-null `proto` column of a wire frame via
@@ -131,11 +49,11 @@ object Sinks {
       checkpoint: String): StreamingQuery =
     wire.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.select("proto").where("proto IS NOT NULL")
           .foreachPartition { (it: Iterator[Row]) =>
             val p = factory()
-            try it.foreach(r => p.publishBatch(batchId, r.getAs[Array[Byte]](0)))
+            try it.foreach(r => p.publish(r.getAs[Array[Byte]](0)))
             finally p.close()
           }
       }

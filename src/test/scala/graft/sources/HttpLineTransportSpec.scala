@@ -1,7 +1,8 @@
 package graft.sources
 
 import java.io.{ByteArrayInputStream, IOException, InputStream}
-import java.nio.charset.StandardCharsets
+import java.nio.charset.{Charset, StandardCharsets}
+import java.nio.file.Files
 import graft.Config
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,13 +19,13 @@ class HttpLineTransportSpec extends AnyFunSuite {
 
   /** InputStream serving fixed byte chunks one per read() call, then either
     * EOF or an IOException (mid-stream disconnect). */
-  private class ChunkedBody(chunks: Seq[String], thenDisconnect: Boolean)
-      extends InputStream {
+  private class ChunkedBody(chunks: Seq[String], thenDisconnect: Boolean,
+      charset: Charset = StandardCharsets.UTF_8) extends InputStream {
     private val it = chunks.iterator
     override def read(): Int = throw new UnsupportedOperationException
     override def read(b: Array[Byte], off: Int, len: Int): Int =
       if (it.hasNext) {
-        val bytes = it.next().getBytes(StandardCharsets.UTF_8)
+        val bytes = it.next().getBytes(charset)
         require(bytes.length <= len, "test chunk larger than read buffer")
         System.arraycopy(bytes, 0, b, off, bytes.length)
         bytes.length
@@ -62,7 +63,7 @@ class HttpLineTransportSpec extends AnyFunSuite {
 
   private def lines(t: LineTransport, start: Long, end: Long): Seq[String] =
     t.planPartitions(start, end).flatMap {
-      case BufferedLinesPartition(ls) => ls
+      case BufferedLinesPartition(ls) => ls.map(_.toString)
     }.toSeq
 
   test("GET carries the stream URL and bearer auth header (oanda_client.rs:23-26)") {
@@ -97,6 +98,26 @@ class HttpLineTransportSpec extends AnyFunSuite {
     try {
       awaitHead(t, 3)
       assert(lines(t, 0, 3) == Seq("{\"a\":1}", "{\"b\":2}", "{\"c\":3}"))
+    } finally t.close()
+  }
+
+  test("the body is framed like a capture file: CRLF, a lone \\r, a line split across chunks") {
+    val chunks = Seq("a\r\nb\rc\n{\"d\"", ":1}\r", "\n\ne\u00ff\nlast")
+    val f = Files.createTempFile("oanda-http", ".jsonl")
+    Files.write(f, chunks.mkString.getBytes(StandardCharsets.ISO_8859_1))
+    val r = LineReaderFactory.createReader(LineRangePartition(f.toString, 0L, Long.MaxValue))
+    val fromFile =
+      try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().getUTF8String(0)).toList
+      finally r.close()
+    assert(fromFile.map(_.toString) == Seq("a", "b\rc", "{\"d\":1}", "", "e\ufffd", "last"))
+    val body = new ChunkedBody(chunks, thenDisconnect = false, StandardCharsets.ISO_8859_1)
+    val t = new HttpLineTransport(cfg, new FakeHttp(Seq(() => ok(body))), maxReconnects = 0)
+    try {
+      awaitHead(t, fromFile.size)
+      val fromHttp = t.planPartitions(0, fromFile.size).toSeq.flatMap {
+        case BufferedLinesPartition(ls) => ls
+      }
+      assert(fromHttp == fromFile, "the HTTP body and the capture file frame lines differently")
     } finally t.close()
   }
 
@@ -197,7 +218,7 @@ class HttpLineTransportSpec extends AnyFunSuite {
     val body = new BlockingBody("l1\n")
     val t = new HttpLineTransport(cfg, new FakeHttp(Seq(() => ok(body))), maxReconnects = 0)
     try {
-      awaitHead(t, 1) // the reader is now parked inside readLine() forever
+      awaitHead(t, 1) // the reader is now parked inside a body read forever
       val spawned = (readerThreads -- before).toSeq
       assert(spawned.size == 1, s"expected exactly one new reader thread, got $spawned")
       t.close()

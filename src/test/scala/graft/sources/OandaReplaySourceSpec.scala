@@ -3,7 +3,7 @@ package graft.sources
 import graft.SparkTestSession
 import graft.streaming.OandaPipeline
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.Offset
@@ -174,26 +174,37 @@ class OandaReplaySourceSpec extends AnyFunSuite {
     assert(batchGz == drain(plain), "gzip batch read diverges")
   }
 
-  test("gzip replay inflates once, spills each batch into chunk files, and cleans up") {
+  test("gzip replay inflates once into a spill file, splits each batch like a plain capture, and cleans up") {
     val lines = (0 until 7500).map(i => s"""{"n":$i,"pad":"${"x" * (i % 50)}"}""")
     val gz = gzCapture(lines)
     val t = new FileLineTransport(gz)
     val s = new OandaReplayMicroBatchStream(t, 2500)
+    val read = scala.collection.mutable.Set[String]()
     var batches = 0
     val out = drive(s) { (_, _, parts) =>
       batches += 1
       assert(parts.length == FileLineTransport.Splits)
+      read ++= parts.map(_.asInstanceOf[LineRangePartition].path)
     }
     assert(batches == 3)
     assert(out == lines, "gzip replay diverges from the capture")
     assert(drive(new OandaReplayMicroBatchStream(
       new FileLineTransport(captureFile(lines)), 2500))() == out, "gzip diverges from plain")
-    assert(t.inflaterOpens == 1, "each batch must not re-inflate the capture")
-    val dir = t.spillDir.getOrElse(fail("no spill directory"))
-    val left = Files.list(dir)
-    try assert(left.count() == 0, "chunk files left after the last commit") finally left.close()
+    assert(t.inflates == 1, "the head count and every batch must share one inflate")
+    assert(read.size == 1 && !read.head.endsWith(".gz"), s"batches read $read")
+    val spill = Paths.get(read.head)
+    assert(Files.exists(spill))
     s.stop()
-    assert(!Files.exists(dir), "spill directory left after stop()")
+    assert(!Files.exists(spill), "spill file left after stop()")
+  }
+
+  test("a .gz capture opened with tail=true still counts its unterminated last line") {
+    val t = new FileLineTransport(gzCapture(Seq("a", "", "b")), tail = true) // no trailing newline
+    try {
+      assert(t.head() == 3)
+      assert(t.planPartitions(0, 3).toSeq.flatMap(readAll) == Seq("a", "", "b"))
+      assert(t.head() == 3 && t.inflates == 1, "a gzip capture does not grow")
+    } finally t.close()
   }
 
   test("a gzip query stopped mid-capture and restarted on its checkpoint delivers every line once") {
@@ -227,9 +238,19 @@ class OandaReplaySourceSpec extends AnyFunSuite {
     Files.write(truncated, whole.take(whole.length / 2))
     val corrupt = Files.createTempFile("oanda-corrupt", ".jsonl.gz")
     Files.write(corrupt, "not gzip at all".getBytes(UTF_8))
-    // planned with no head() first (the planner raises it on the driver)
-    intercept[java.io.IOException](new FileLineTransport(truncated.toString).planPartitions(0, 10))
-    intercept[java.io.IOException](new FileLineTransport(corrupt.toString).planPartitions(0, 10))
+    def spills(): Set[Path] = {
+      val ls = Files.list(Files.createDirectories(FileLineTransport.spillRoot))
+      try ls.iterator.asScala.filter(_.getFileName.toString.startsWith("oanda-replay-")).toSet
+      finally ls.close()
+    }
+    val before = spills()
+    for (bad <- Seq(truncated, corrupt)) {
+      // planned with no head() first (the planner raises it on the driver)
+      val t = new FileLineTransport(bad.toString)
+      intercept[java.io.IOException](t.planPartitions(0, 10))
+      assert(t.inflates == 1)
+    }
+    assert(spills() == before, "a failed inflate left a partial spill file")
     for (bad <- Seq(truncated, corrupt)) {
       val q = spark.readStream.format("oanda-replay").option("path", bad.toString).load()
         .writeStream

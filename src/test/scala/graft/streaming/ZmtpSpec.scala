@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     grammar (raw socket, no shared encoder for its send path beyond the
   *     octet constants asserted in layer 1), driving the full lifecycle:
   *     handshake, subscribe, filtered delivery, cancel, incompatible-peer
-  *     rejection, drop-when-unsubscribed.
+  *     rejection, drop-when-unsubscribed, drop-at-high-water-mark.
   */
 class ZmtpSpec extends AnyFunSuite {
 
@@ -229,6 +229,29 @@ class ZmtpSpec extends AnyFunSuite {
       server.publish("tick:EURUSD".getBytes(US_ASCII))
       assert(new String(sub.recv(), US_ASCII) == "tick:EURUSD")
       assert(sub.recvWithin(300).isEmpty)
+      sub.close()
+    } finally server.close()
+  }
+
+  test("a stalled subscriber never blocks publish; frames drop at the HWM") {
+    val server = new ZmtpPubServer(0, highWaterMark = 4)
+    try {
+      val sub = new SubClient(server.boundPort)
+      sub.handshake()
+      awaitSubscribers(server, 1)
+      sub.subscribe(Array.empty)
+      Thread.sleep(100) // subscription propagation
+      // the subscriber reads nothing: the socket buffers fill, the writer
+      // parks on its write, and the bounded queue takes the overflow
+      val payload = new Array[Byte](512 * 1024)
+      val t0 = System.nanoTime()
+      (1 to 64).foreach(_ => server.publish(payload))
+      val elapsedSec = (System.nanoTime() - t0) / 1e9
+      assert(elapsedSec < 10.0,
+        f"64 x 512 KiB to a stalled subscriber took $elapsedSec%.1f s: publish blocked")
+      var received = 0
+      while (!sub.recvNone(1000)) received += 1
+      assert(received < 64, "no frame was dropped at the high-water mark")
       sub.close()
     } finally server.close()
   }
