@@ -6,10 +6,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, JsonToStructs, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd fixed-schema parser for the two known OANDA wire shapes
@@ -373,4 +374,52 @@ case class ParseOandaWire(child: Expression) extends UnaryExpression {
 
 object ParseOandaWire {
   def parseWire(c: Column): Column = column(ParseOandaWire(expression(c)))
+}
+
+/** `levels_complete(levels)` — true iff a parsed `asks`/`bids` array is
+  * non-null and every level has both a `price` and a `liquidity` (serde's
+  * typed `PriceLevel`, `models.rs:10-13`, requires both). Same value as
+  * `levels IS NOT NULL AND NOT exists(levels, x -> x.price IS NULL OR
+  * x.liquidity IS NULL)`, but with real `doGenCode`: the higher-order
+  * `exists` is CodegenFallback and would evict the pipeline's dispatch
+  * projection from whole-stage codegen. */
+case class LevelsComplete(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def prettyName: String = "levels_complete"
+
+  override def eval(input: InternalRow): Any = {
+    val levels = child.eval(input)
+    levels != null && LevelsComplete.complete(levels.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.value} = !${c.isNull} &&
+        graft.functions.LevelsComplete.complete(${c.value});""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(newChild)
+}
+
+object LevelsComplete {
+  private val price = OandaSchemas.priceLevelSchema.fieldIndex("price")
+  private val liquidity = OandaSchemas.priceLevelSchema.fieldIndex("liquidity")
+  private val width = OandaSchemas.priceLevelSchema.length
+
+  def complete(levels: ArrayData): Boolean = {
+    var i = 0
+    while (i < levels.numElements()) {
+      if (levels.isNullAt(i)) return false
+      val level = levels.getStruct(i, width)
+      if (level.isNullAt(price) || level.isNullAt(liquidity)) return false
+      i += 1
+    }
+    true
+  }
+
+  def levelsComplete(levels: Column): Column = column(LevelsComplete(expression(levels)))
 }

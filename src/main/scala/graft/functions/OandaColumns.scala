@@ -79,9 +79,12 @@ object OandaColumns {
     * dead-letter side. */
   def parseEventTime(time: Column): Column =
     // RFC3339 allows lowercase t/z (chrono accepts them); Spark's cast wants
-    // uppercase — translate the two marker letters, digits are unaffected
+    // uppercase — translate the two marker letters, digits are unaffected.
+    // Past the grammar gate only those markers can be lowercase letters, so
+    // a time string without either skips the per-character translate.
     when(time.rlike(wireTimeGrammar),
-      translate(time, "tz", "TZ").try_cast("timestamp"))
+      when(time.contains("t") || time.contains("z"), translate(time, "tz", "TZ"))
+        .otherwise(time).try_cast("timestamp"))
 
   /** P9 fidelity sidecar — nanosecond component of the wire timestamp.
     * Spark TimestampType is µs; the proto carries nanos

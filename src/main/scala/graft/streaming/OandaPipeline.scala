@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.OandaColumns
 import graft.model.OandaSchemas
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference pipeline (SURVEY.md §3.1) as one declarative plan:
@@ -34,7 +34,9 @@ object OandaPipeline {
     */
   def parse(lines: DataFrame): DataFrame = {
     val parsed = lines
-      .filter(length(trim(col("value"))) > 0) // P3: oanda_client.rs:50-53
+      // P3: oanda_client.rs:50-53; compares bytes instead of counting the
+      // characters of every line, and is null for a null line either way
+      .filter(trim(col("value")) =!= "")
       // round-8: parse_oanda_wire = the codegen'd two-shape parser with a
       // Jackson (from_json PERMISSIVE) delegate for anything surprising —
       // value-identical to from_json(wireSchema) by construction
@@ -61,8 +63,9 @@ object OandaPipeline {
             "status", "time", "type").map(f => col(s"j.$f").isNotNull).reduce(_ || _) ||
           try_parse_json(col("value")).isNotNull)
 
-    val levelOk: Column => Column = arr =>
-      arr.isNotNull && !exists(arr, x => x.getField("price").isNull || x.getField("liquidity").isNull)
+    // levels_complete, not an exists() lambda: higher-order functions are
+    // CodegenFallback and would split the plan into two codegen stages
+    val levelOk = graft.functions.LevelsComplete.levelsComplete _
     val tickValid =
       levelOk(col("j.asks")) && levelOk(col("j.bids")) &&
         col("j.closeoutAsk").isNotNull && col("j.closeoutBid").isNotNull &&

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Sink-side publishing (SURVEY.md §2A P14-P16).
@@ -40,24 +42,52 @@ object InMemoryPublisher {
   }
 }
 
+/** The pipeline's sinks.
+  *
+  * Both streaming sinks start their query with [[LocalCheckpointFileManager]]
+  * when the checkpoint is on the local filesystem: Spark's default manager
+  * forks a `readlink`/`chmod` child process per checkpoint-log path when
+  * Hadoop has no NativeIO library, about 37 ms for each of the two log files
+  * a micro-batch writes. The manager is installed through Spark's extension
+  * point `spark.sql.streaming.checkpointFileManagerClass`, set on the
+  * session only around `start()`: the query clones the session when it is
+  * constructed and builds its checkpoint logs from that clone, so the
+  * session itself is left as it was. A caller that sets the key itself,
+  * on the session or in the Spark conf, keeps its own manager; a checkpoint
+  * on any other filesystem keeps Spark's default.
+  */
 object Sinks {
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Start a foreachBatch query over `df` with [[LocalCheckpointFileManager]]
+    * installed on its session for the duration of `start()` (see [[Sinks]]).
+    * Starts are serialized, so concurrent starts cannot unset each other's
+    * install. */
+  private def startForeachBatch(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = synchronized {
+    val spark = df.sparkSession
+    val install = spark.conf.getOption(CheckpointManagerKey).isEmpty &&
+      new Path(checkpoint).getFileSystem(DatasetBridge.hadoopConf(spark))
+        .isInstanceOf[LocalFileSystem]
+    if (install) spark.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+    try df.writeStream.option("checkpointLocation", checkpoint).foreachBatch(body).start()
+    finally if (install) spark.conf.unset(CheckpointManagerKey)
+  }
 
   /** P14: publish the non-null `proto` column of a wire frame via
     * foreachBatch; each partition opens its own publisher (executor-side —
     * the node boundary of SURVEY.md §3.4#3). */
   def publishStream(wire: DataFrame, factory: () => MessagePublisher,
       checkpoint: String): StreamingQuery =
-    wire.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.select("proto").where("proto IS NOT NULL")
-          .foreachPartition { (it: Iterator[Row]) =>
-            val p = factory()
-            try it.foreach(r => p.publish(r.getAs[Array[Byte]](0)))
-            finally p.close()
-          }
-      }
-      .start()
+    startForeachBatch(wire, checkpoint) { (batch, _) =>
+      batch.select("proto").where("proto IS NOT NULL")
+        .foreachPartition { (it: Iterator[Row]) =>
+          val p = factory()
+          try it.foreach(r => p.publish(r.getAs[Array[Byte]](0)))
+          finally p.close()
+        }
+    }
 
   /** Exactly-once parquet sink: foreachBatch writes each micro-batch to its
     * own `batch_id=N` partition with OVERWRITE, so a batch replayed after a
@@ -68,12 +98,7 @@ object Sinks {
     * batch-id-keyed idempotence pattern (no sink-side transaction log
     * needed). IdempotentSinkSpec proves the replay case. */
   def idempotentParquet(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, path, batchId)
-      }
-      .start()
+    startForeachBatch(df, checkpoint)((batch, batchId) => writeBatch(batch, path, batchId))
 
   /** The per-batch idempotent write (factored out so the replay contract is
     * directly testable: calling it twice for one batchId must be a no-op). */

@@ -115,6 +115,7 @@ class OandaColumnsSpec extends AnyFunSuite {
       .collect().foreach(r => assert(r.get(0) == null, r))
     // both reference grammars still parse
     val inside = Seq("2024-01-15T09:30:00Z", "2024-01-15t09:30:00z",
+      "2024-01-15T09:30:00z", "2024-01-15t09:30:00Z",
       "2024-01-15T09:30:00.5Z", "2024-01-15T09:30:00-05:00")
     inside.toDF("t").select(col("t"), OandaColumns.parseEventTime(col("t")).as("ts"))
       .collect().foreach(r => assert(r.get(1) != null, r.getString(0)))

@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Replays the reference's ingest semantics (SURVEY.md §2A, FIXTURES.md §A)
   * through the full pipeline — every edge line maps to a documented
@@ -26,6 +27,7 @@ class OandaPipelineSpec extends AnyFunSuite {
     tickLine,
     heartbeatLine,
     "   ",                                   // blank → dropped (oanda_client.rs:50-53)
+    "",                                      // empty → dropped
     "{not json",                             // malformed (oanda_client.rs:55-61)
     """{"foo": 1}""",                        // no discriminator → unknown (oanda_client.rs:79-82)
     "\"hello\"",                             // valid scalar JSON → unknown (serde Value parses it)
@@ -40,7 +42,7 @@ class OandaPipelineSpec extends AnyFunSuite {
 
   test("dispatch: P3 blank drop, P4 malformed, P5/P6 discriminators and fallbacks") {
     val out = run(edgeLines)
-    assert(out.count() == 9) // blank line dropped
+    assert(out.count() == 9) // blank and empty lines dropped
     val byType = out.groupBy("message_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byType == Map("price_tick" -> 2L, "heartbeat" -> 1L,
@@ -97,5 +99,28 @@ class OandaPipelineSpec extends AnyFunSuite {
     // every frame is a StreamMessageProto with oneof field 1 (tick) or 2 (hb)
     val oneofs = frames.map(f => graft.proto.ProtoWire.readFields(f).head.number).toSet
     assert(oneofs == Set(1, 2))
+  }
+
+  test("the whole pipeline above the scan runs in one whole-stage codegen stage") {
+    import org.apache.spark.sql.execution.{InputAdapter, LeafExecNode, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val tmp = java.nio.file.Files.createTempDirectory("graft-oanda-codegen")
+    java.nio.file.Files.write(tmp.resolve("cap.jsonl"), edgeLines.asJava)
+    val wire = OandaPipeline.pipeline(spark.read.text(tmp.resolve("cap.jsonl").toString))
+    wire.collect()
+    val plan = wire.queryExecution.executedPlan
+    val nodes = SparkTestSession.flattenExecuted(plan)
+    val stages = nodes.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.size == 1, s"expected one codegen stage:\n$plan")
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(inStage)
+    }
+    val fused = inStage(stages.head.child)
+    val operators = nodes.filterNot(n => n.isInstanceOf[WholeStageCodegenExec] ||
+      n.isInstanceOf[InputAdapter] || n.isInstanceOf[LeafExecNode] ||
+      n.isInstanceOf[AdaptiveSparkPlanExec])
+    assert(operators.nonEmpty && operators.forall(o => fused.exists(_ eq o)),
+      s"an operator runs outside the codegen stage:\n$plan")
   }
 }
